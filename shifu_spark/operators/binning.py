@@ -42,6 +42,37 @@ def equal_interval_boundaries(df: DataFrame, col: str, num_bins: int) -> list[fl
     return [mn + i * width for i in range(num_bins)]
 
 
+def boundary_quantiles(num_bins: int) -> list[float]:
+    """The left-edge quantiles of ``num_bins`` equal-population bins."""
+    return [i / num_bins for i in range(num_bins)]
+
+
+def boundary_population(
+    method: str,
+    tag_col: str | None = None,
+    pos_tags: list[str] | None = None,
+    neg_tags: list[str] | None = None,
+) -> Column | None:
+    """Row predicate of the population a BinningMethod quantiles over:
+    positives for EqualPositive, negatives for EqualNegative, every row
+    (``None``) otherwise (ModelStatsConf.java:34-36)."""
+    if method == "EqualPositive":
+        return F.col(tag_col).isin(pos_tags or [])
+    if method == "EqualNegative":
+        return F.col(tag_col).isin(neg_tags or [])
+    return None
+
+
+def dedupe_boundaries(arr) -> list[float]:
+    """Drop NULL and repeated edges, keeping the first of each run of
+    equal quantiles (MunroPatBinning.java:60-99 merges dups)."""
+    out: list[float] = []
+    for b in arr or []:
+        if b is not None and (not out or b > out[-1]):
+            out.append(b)
+    return out
+
+
 def equal_population_boundaries(
     df: DataFrame,
     col: str,
@@ -52,42 +83,32 @@ def equal_population_boundaries(
     neg_tags: list[str] | None = None,
     exact: bool = True,
 ) -> list[float]:
-    """Equal-frequency left edges over the method-selected population.
+    """Equal-frequency left edges over the method-selected population,
+    for one column.
 
     EqualPositive (reference default) quantiles over positive rows only;
     EqualNegative over negatives; EqualTotal over all valid rows
     (ModelStatsConf.java:34-36, udf/stats/NumericalVarStats.java:55-130).
     ``exact=False`` uses percentile_approx (KLL, 10k accuracy — the scale
     path matching the reference's 10k-centroid SPDT bound).
+    ``stats.numeric_column_stats`` computes the same edges for many
+    columns in one grouped aggregate.
     """
     v = F.col(col).try_cast("double")
     pop = df.filter(v.isNotNull())
-    if method == "EqualPositive":
-        pop = pop.filter(F.col(tag_col).isin(pos_tags or []))
-    elif method == "EqualNegative":
-        pop = pop.filter(F.col(tag_col).isin(neg_tags or []))
-    qs = [i / num_bins for i in range(num_bins)]
+    in_pop = boundary_population(method, tag_col, pos_tags, neg_tags)
+    if in_pop is not None:
+        pop = pop.filter(in_pop)
+    qs = boundary_quantiles(num_bins)
     if exact:
         # aggregate over the SAME cast the filter used: the raw column
         # may be string-typed (shifu-style raw text input) — exact
         # percentile over the uncast column would throw or, with mixed
         # junk tokens, disagree with the try_cast-filtered population
-        arr = pop.agg(
-            F.expr(
-                f"percentile(try_cast({col} AS DOUBLE), "
-                f"array({','.join(str(q) for q in qs)}))"
-            )
-        ).collect()[0][0]
+        arr = pop.agg(F.percentile(v, qs)).collect()[0][0]
     else:
         arr = pop.agg(F.percentile_approx(v, qs, 10000)).collect()[0][0]
-    if arr is None:
-        return []
-    # de-duplicate equal boundaries (MunroPatBinning.java:60-99 merges dups)
-    out: list[float] = []
-    for b in arr:
-        if b is not None and (not out or b > out[-1]):
-            out.append(b)
-    return out
+    return dedupe_boundaries(arr)
 
 
 def weighted_equal_population_boundaries(
@@ -107,17 +128,13 @@ def weighted_equal_population_boundaries(
     when the input is more than a driver-friendly sample.
     """
     v = F.col(col).try_cast("double")
-    qs = [i / num_bins for i in range(num_bins)]
+    qs = boundary_quantiles(num_bins)
     arr = (
         df.filter(v.isNotNull())
         .agg(F.expr(f"percentile({col}, array({','.join(str(q) for q in qs)}), greatest(cast({weight_col}*1000 as bigint), 1L))"))
         .collect()[0][0]
     )
-    out: list[float] = []
-    for b in arr or []:
-        if b is not None and (not out or b > out[-1]):
-            out.append(b)
-    return out
+    return dedupe_boundaries(arr)
 
 
 def weighted_quantile_scalable(df: DataFrame, col: str, weight_col: str, qs: list[float], resolution: int = 10000) -> list[float]:
@@ -156,26 +173,34 @@ def weighted_quantile_scalable(df: DataFrame, col: str, weight_col: str, qs: lis
 
 def categorical_bins(
     df: DataFrame,
-    col: str,
+    columns: list[str],
     max_cate_size: int = 0,
-    tag_col: str | None = None,
-    pos_tags: list[str] | None = None,
-) -> list[str]:
-    """Frequency-ordered category list (CategoricalBinning.java:33).
+    missing_tokens: list[str] | None = None,
+) -> dict[str, list[str]]:
+    """Frequency-ordered category list per column (CategoricalBinning.java:33),
+    for all ``columns`` from one melted ``groupBy(col_id, value).count()``.
 
-    Collapses beyond ``max_cate_size`` most-frequent categories (the
-    reference auto-collapses when > maxCateSize). Deterministic order:
-    count desc, then category asc.
+    Values are compared as strings (the reference's binCategory is a
+    list of strings). NULL and every value in ``missing_tokens`` are
+    missing, not categories. Deterministic order: count desc, then
+    category asc; only the ``max_cate_size`` most frequent are kept when
+    it is positive (the reference auto-collapses when > maxCateSize).
     """
-    counts = (
-        df.filter(F.col(col).isNotNull())
-        .groupBy(col)
-        .count()
-        .orderBy(F.desc("count"), F.asc(col))
-    )
-    if max_cate_size and max_cate_size > 0:
-        counts = counts.limit(max_cate_size)
-    return [r[0] for r in counts.collect()]
+    from shifu_spark.operators.stats import melt
+
+    if not columns:
+        return {}
+    tokens = list(missing_tokens or [])
+    cells = []
+    for c in columns:
+        v = F.col(c).cast("string")
+        cells.append([F.when(~v.isin(tokens), v).alias("value")])
+    rows = melt(df, cells).filter(F.col("value").isNotNull()).groupBy("col_id", "value").count().collect()
+    ranked: list[list[tuple[int, str]]] = [[] for _ in columns]
+    for r in rows:
+        ranked[r["col_id"]].append((-r["count"], r["value"]))
+    keep = max_cate_size if max_cate_size and max_cate_size > 0 else None
+    return {c: [v for _, v in sorted(ranked[i])[:keep]] for i, c in enumerate(columns)}
 
 
 # ntile_boundaries cap: a single-task sort of ~10M doubles is the most a
@@ -219,11 +244,7 @@ def ntile_boundaries(
         .orderBy("t")
         .collect()
     )
-    out: list[float] = []
-    for r in tiles:
-        if not out or r["edge"] > out[-1]:
-            out.append(r["edge"])
-    return out
+    return dedupe_boundaries(r["edge"] for r in tiles)
 
 
 # ---------------------------------------------------------------------------

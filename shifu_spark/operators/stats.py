@@ -8,25 +8,34 @@ that re-reads ALL raw data accumulating per-column power sums and bin
 counts, then finalizes mean/stddev/skew/kurt/KS/IV/WOE
 (core/ColumnStatsCalculator.java:31-120,183-215).
 
-Spark-first design — ONE data pass, ZERO row shuffle for the moment pass:
-  * All per-column moment aggregates go into a single wide ``df.agg(...)``
-    — Catalyst's partial aggregation does the reference's hand-written
-    in-mapper combining (UpdateBinningInfoMapper.java:67+) automatically,
-    and the shuffled payload is one partial-agg row per task, not data.
-  * Bin counting is a melt (posexplode over an array literal — a
-    pipelined narrow op, never materialized) followed by
-    ``groupBy(col_id, bin).agg(...)`` whose map-side partial agg reduces
-    each task's output to ~n_cols×n_bins rows. The reference's manual
-    salt ((columnId, rand) two-level group, StatsSpdtI.pig:57-60) is
-    unnecessary: partial aggregation already spreads the per-column hot
-    keys; AQE handles residual skew.
+Spark-first design — the reference's unpivot, kept: a fixed number of
+jobs and a fixed-size aggregate plan for any number of columns.
+  * :func:`melt` turns the table into (col_id, value) rows with one
+    ``explode(array(struct(col_id, value...)))`` — a pipelined narrow
+    op, never materialized.
+  * Every per-column statistic is then ONE ``groupBy(col_id)``
+    aggregate (:func:`numeric_column_stats`): moments from DECIMAL power
+    sums, min/max, exact quartiles, exact distinct count and the
+    equal-population bin boundaries of the configured BinningMethod
+    (its population is a CASE inside the ``percentile`` argument, not a
+    filter). The aggregate's size does not grow with the column count,
+    so its generated code stays small; one wide ``df.agg`` with a dozen
+    aggregates per column outgrew the JVM's 64 KB method limit and fell
+    back to interpreted execution. Partial aggregation does the
+    reference's in-mapper combining (UpdateBinningInfoMapper.java:67+);
+    the manual salt ((columnId, rand) two-level group,
+    StatsSpdtI.pig:57-60) is unnecessary — partial aggregation already
+    spreads the per-column hot keys and AQE handles residual skew.
+  * Categories (``binning.categorical_bins``) and bin counts
+    (``ksiv.bin_counts_df``) are melts grouped by (col_id, value) and
+    (col_id, bin).
   * KS/IV/WOE finalization is O(cols × bins) array math on the driver —
     exactly ColumnStatsCalculator semantics (EPS=1e-10).
 
-At 100 TB: the moment pass is a full scan with partial agg (optimal); the
-bin-count pass scans once more with only (cols × bins × tasks) rows
-shuffled. Both are column-pruned parquet scans when ``columns`` is a
-subset.
+At 100 TB every statistic is a full scan whose shuffle carries one
+partial-aggregate row per (task, column) — per (task, column, distinct
+value) for the exact quartiles and distinct count; the sketch path
+(``exact_percentiles=False``, ``distinct_exact=False``) bounds that too.
 """
 
 from __future__ import annotations
@@ -34,8 +43,10 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from shifu_spark.operators.binning import boundary_population, boundary_quantiles, dedupe_boundaries
 
 EPS = 1e-10  # reference ColumnStatsCalculator.java EPS
 
@@ -88,6 +99,7 @@ class NumericColumnStats:
     median: float
     p75: float
     distinct_count: int
+    boundaries: list[float] | None = None  # equal-population left edges, when asked for
 
     @property
     def missing_percentage(self) -> float:
@@ -103,59 +115,89 @@ class NumericColumnStats:
 #: partition order, which flips rounded 6th decimals at knife edges. The
 #: per-row term is computed in double (identical in Spark/DuckDB), cast to
 #: decimal once, then summed exactly. At extreme scale (where x^4 sums
-#: could exceed DECIMAL(38,10)) flip ``decimal_sums=False`` for the
-#: double-sum fast path — the engine doesn't need cross-engine bit
-#: determinism in production, only the oracle gate does.
+#: could exceed DECIMAL(38,10)) double sums are the fast path — the
+#: engine doesn't need cross-engine bit determinism in production, only
+#: the oracle gate does.
 _DEC = "decimal(38,10)"
 
 
-def _moment_aggs(c: str, exact_percentiles: bool, distinct_exact: bool, decimal_sums: bool = True) -> list:
-    """Wide-agg expressions for one numeric column.
+def melt(df: DataFrame, cells: list[list[Column]], keep: list[str] = ()) -> DataFrame:
+    """Unpivot: one output row per (input row, cell). ``cells[i]`` are the
+    named field expressions of column ``i``; every cell must give the same
+    field names and types. The result has ``col_id`` (the index into
+    ``cells``), those fields, and the ``keep`` columns of the input row."""
+    rows = F.array(*[F.struct(F.lit(i).alias("col_id"), *fields) for i, fields in enumerate(cells)])
+    return df.select(F.explode(rows).alias("_cell"), *keep).select("_cell.*", *keep)
 
-    Missing values are excluded from moments, mirroring
-    UpdateBinningInfoReducer.java:351 ("To make it be consistent with
-    SPDT, missingCount is excluded") — and NaN/Infinity ARE missing
-    (Normalizer.java:566-571): a non-finite double nulls out of the
-    DECIMAL power-sum cast, so counting it in ``valid`` while every sum
-    drops it would skew mean/std/skew/kurt silently (and NaN would
-    poison max under Spark's NaN-is-largest ordering). Nulling v up
-    front keeps count/sums/min/max/percentiles/distinct consistent on
-    one population.
+
+def _numeric_aggregate(
+    df: DataFrame,
+    columns: list[str],
+    exact_percentiles: bool = True,
+    distinct_exact: bool = True,
+    num_bins: int | None = None,
+    population: Column | None = None,
+) -> DataFrame:
+    """The stats kernel: one ``groupBy(col_id)`` aggregate over the melted
+    columns, with exactly one row per column (empty input included).
+
+    Two populations, as the reference keeps them:
+      * moments, min/max, quartiles and the distinct count run over
+        ``v`` — the finite values: NULL, NaN and ±Infinity are missing,
+        mirroring UpdateBinningInfoReducer.java:351 ("missingCount is
+        excluded") and Normalizer.java:566-571. A non-finite double nulls
+        out of the DECIMAL power-sum cast, so counting it in ``valid``
+        while every sum drops it would skew mean/std/skew/kurt silently
+        (and NaN would poison max under Spark's NaN-is-largest ordering).
+      * the bin boundaries (``num_bins``) run over every non-NULL
+        ``try_cast`` value of the rows where ``population`` holds — the
+        population ``binning.equal_population_boundaries`` filters to.
     """
     from shifu_spark.functions.nonvalue import is_value
 
-    raw = F.col(c).try_cast("double")
-    v = F.when(is_value(raw), raw)
+    keep = []
+    if population is not None:
+        df = df.withColumn("_pop", population)
+        keep = ["_pop"]
+    cells = [[F.col(c).try_cast("double").alias("x")] for c in columns]
+    melted = melt(df, cells, keep).withColumn("_row", F.lit(1))
+    # one all-NULL row per column, counted by no statistic, so that every
+    # column gets its group (an empty input yields n = 0, not no row)
+    spine = df.sparkSession.createDataFrame(
+        [(i,) for i in range(len(columns))], "col_id int"
+    ).select("col_id", F.lit(None).cast("double").alias("x"),
+             *[F.lit(None).cast("boolean").alias(k) for k in keep], F.lit(0).alias("_row"))
+    melted = melted.unionByName(spine)
+
+    x = F.col("x")
+    v = F.when(is_value(x), x)
 
     def s(e):
-        return F.sum(e.cast(_DEC)).cast("double") if decimal_sums else F.sum(e)
+        return F.sum(e.cast(_DEC)).cast("double")
+
+    def pct(e, qs):
+        # exact, or the scale path's KLL sketch with bounded memory (the
+        # reference bounds its SPDT histogram at 10k centroids —
+        # EqualPopulationBinning.java:98-101)
+        return F.percentile(e, qs) if exact_percentiles else F.percentile_approx(e, qs, 10000)
 
     aggs = [
-        F.count(F.lit(1)).alias(f"{c}__n"),
-        F.count(v).alias(f"{c}__valid"),
-        s(v).alias(f"{c}__s1"),
-        s(v * v).alias(f"{c}__s2"),
-        s(v * v * v).alias(f"{c}__s3"),
-        s(v * v * v * v).alias(f"{c}__s4"),
-        F.min(v).alias(f"{c}__min"),
-        F.max(v).alias(f"{c}__max"),
-    ]
-    if exact_percentiles:
-        # over v, not the raw column: the non-finite→missing mapping must
-        # cover percentiles too or the populations diverge
-        aggs.append(
-            F.percentile(v, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75))).alias(f"{c}__pct")
-        )
-    else:
-        # scale path: KLL sketch, bounded memory (reference bounds its SPDT
-        # histogram at 10k centroids — EqualPopulationBinning.java:98-101)
-        aggs.append(F.percentile_approx(v, [0.25, 0.5, 0.75], 10000).alias(f"{c}__pct"))
-    if distinct_exact:
-        aggs.append(F.countDistinct(v).alias(f"{c}__dc"))
-    else:
+        F.sum("_row").alias("n"),
+        F.count(v).alias("valid"),
+        s(v).alias("s1"),
+        s(v * v).alias("s2"),
+        s(v * v * v).alias("s3"),
+        s(v * v * v * v).alias("s4"),
+        F.min(v).alias("min"),
+        F.max(v).alias("max"),
+        pct(v, [0.25, 0.5, 0.75]).alias("pct"),
         # reference uses HyperLogLogPlus (AutoTypeDistinctCountMapper.java:39)
-        aggs.append(F.approx_count_distinct(v).alias(f"{c}__dc"))
-    return aggs
+        (F.countDistinct(v) if distinct_exact else F.approx_count_distinct(v)).alias("dc"),
+    ]
+    if num_bins:
+        pop_x = x if population is None else F.when(F.col("_pop"), x)
+        aggs.append(pct(pop_x, boundary_quantiles(num_bins)).alias("bounds"))
+    return melted.groupBy("col_id").agg(*aggs)
 
 
 def numeric_column_stats(
@@ -163,28 +205,41 @@ def numeric_column_stats(
     columns: list[str],
     exact_percentiles: bool = True,
     distinct_exact: bool = True,
+    num_bins: int | None = None,
+    method: str = "EqualTotal",
+    tag_col: str | None = None,
+    pos_tags: list[str] | None = None,
+    neg_tags: list[str] | None = None,
 ) -> list[NumericColumnStats]:
-    """Compute full numeric stats for ``columns`` in ONE wide aggregate.
+    """Full numeric stats for ``columns`` in ONE grouped aggregate.
 
+    With ``num_bins``, each column's ``boundaries`` are the equal-population
+    left edges of ``method`` — the same edges
+    ``binning.equal_population_boundaries`` returns per column.
     ``exact_percentiles=False`` / ``distinct_exact=False`` switch to the
     sketch-based scale path (percentile_approx / approx_count_distinct).
     """
-    aggs: list = []
-    for c in columns:
-        aggs.extend(_moment_aggs(c, exact_percentiles, distinct_exact))
-    row = df.agg(*aggs).collect()[0].asDict()
+    if not columns:
+        return []
+    population = boundary_population(method, tag_col, pos_tags, neg_tags) if num_bins else None
+    rows = {
+        r["col_id"]: r
+        for r in _numeric_aggregate(
+            df, columns, exact_percentiles, distinct_exact, num_bins=num_bins, population=population
+        ).collect()
+    }
 
     out: list[NumericColumnStats] = []
-    for c in columns:
-        n = row[f"{c}__n"]
-        valid = row[f"{c}__valid"]
-        s1 = row[f"{c}__s1"] or 0.0
-        s2 = row[f"{c}__s2"] or 0.0
-        s3 = row[f"{c}__s3"] or 0.0
-        s4 = row[f"{c}__s4"] or 0.0
+    for i, c in enumerate(columns):
+        r = rows[i]
+        n, valid = r["n"], r["valid"]
+        s1 = r["s1"] or 0.0
+        s2 = r["s2"] or 0.0
+        s3 = r["s3"] or 0.0
+        s4 = r["s4"] or 0.0
         mean = s1 / valid if valid else 0.0
         a_std = population_std_dev(valid, s1, s2)
-        pct = row[f"{c}__pct"] or [None, None, None]
+        pct = r["pct"] or [None, None, None]
         out.append(
             NumericColumnStats(
                 column_name=c,
@@ -193,14 +248,15 @@ def numeric_column_stats(
                 valid_count=valid,
                 mean=mean,
                 std_dev=sample_std_dev(valid, s1, s2),
-                min=row[f"{c}__min"],
-                max=row[f"{c}__max"],
+                min=r["min"],
+                max=r["max"],
                 skewness=skewness(valid, mean, a_std, s1, s2, s3),
                 kurtosis=kurtosis(valid, mean, a_std, s1, s2, s3, s4),
                 p25=pct[0],
                 median=pct[1],
                 p75=pct[2],
-                distinct_count=row[f"{c}__dc"],
+                distinct_count=r["dc"],
+                boundaries=dedupe_boundaries(r["bounds"]) if num_bins else None,
             )
         )
     return out
@@ -208,60 +264,46 @@ def numeric_column_stats(
 
 def numeric_stats_df(df: DataFrame, columns: list[str], round_to: int | None = 6) -> DataFrame:
     """Same stats as :func:`numeric_column_stats` but as a DataFrame plan
-    (one row per column) — the oracle-checkable query shape.
-
-    Implemented as the wide agg + a driver-side unpivot of the SINGLE
-    result row into per-column rows via a union of literal-free selects —
-    still one Spark job, one data pass.
-    """
-    aggs: list = []
-    for c in columns:
-        aggs.extend(_moment_aggs(c, exact_percentiles=True, distinct_exact=True))
-    wide = df.agg(*aggs)
+    (one row per column, in ``columns`` order) — the oracle-checkable
+    query shape. The closed forms run as column expressions over the
+    grouped aggregate's rows."""
+    g = _numeric_aggregate(df, columns)
 
     def rnd(e):
         return F.round(e, round_to) if round_to is not None else e
 
-    selects = []
-    for c in columns:
-        n, valid = F.col(f"{c}__n"), F.col(f"{c}__valid")
-        s1, s2 = F.col(f"{c}__s1"), F.col(f"{c}__s2")
-        s3, s4 = F.col(f"{c}__s3"), F.col(f"{c}__s4")
-        mean = s1 / valid
-        a_var = F.abs((s2 - s1 * s1 / valid + F.lit(EPS)) / valid)
-        a_std = F.sqrt(a_var)
-        skew = (s3 - 3 * s2 * mean + 3 * mean * mean * s1 - valid * F.pow(mean, 3)) / (valid * F.pow(a_std, 3))
-        kurt = (s4 - 4 * s3 * mean + 6 * s2 * mean * mean - 4 * s1 * F.pow(mean, 3) + valid * F.pow(mean, 4)) / (
-            valid * F.pow(a_var, 2)
-        )
-        # valid <= 1 -> sample std 0.0 (the reference closed form's n<=1
-        # guard, sample_std_dev above); the bare (valid-1) divisor was an
-        # ANSI DIVIDE_BY_ZERO crash on a single-row population (r10
-        # degenerate-population audit). Oracle mirrors the CASE.
-        std = F.when(valid <= 1, F.lit(0.0)).otherwise(
-            F.sqrt(F.abs((s2 - s1 * s1 / valid + F.lit(EPS)) / (valid - 1)))
-        )
-        selects.append(
-            wide.select(
-                F.lit(c).alias("column_name"),
-                n.cast("long").alias("total_count"),
-                (n - valid).cast("long").alias("missing_count"),
-                rnd(mean).alias("mean"),
-                rnd(std).alias("std_dev"),
-                rnd(F.col(f"{c}__min")).alias("min_val"),
-                rnd(F.col(f"{c}__max")).alias("max_val"),
-                rnd(skew).alias("skewness"),
-                rnd(kurt).alias("kurtosis"),
-                rnd(F.col(f"{c}__pct").getItem(0)).alias("p25"),
-                rnd(F.col(f"{c}__pct").getItem(1)).alias("median"),
-                rnd(F.col(f"{c}__pct").getItem(2)).alias("p75"),
-                F.col(f"{c}__dc").cast("long").alias("distinct_count"),
-            )
-        )
-    out = selects[0]
-    for s in selects[1:]:
-        out = out.unionAll(s)
-    return out
+    n, valid = F.col("n"), F.col("valid")
+    s1, s2, s3, s4 = F.col("s1"), F.col("s2"), F.col("s3"), F.col("s4")
+    mean = s1 / valid
+    a_var = F.abs((s2 - s1 * s1 / valid + F.lit(EPS)) / valid)
+    a_std = F.sqrt(a_var)
+    skew = (s3 - 3 * s2 * mean + 3 * mean * mean * s1 - valid * F.pow(mean, 3)) / (valid * F.pow(a_std, 3))
+    kurt = (s4 - 4 * s3 * mean + 6 * s2 * mean * mean - 4 * s1 * F.pow(mean, 3) + valid * F.pow(mean, 4)) / (
+        valid * F.pow(a_var, 2)
+    )
+    # valid <= 1 -> sample std 0.0 (the reference closed form's n<=1
+    # guard, sample_std_dev above); the bare (valid-1) divisor was an
+    # ANSI DIVIDE_BY_ZERO crash on a single-row population (r10
+    # degenerate-population audit). Oracle mirrors the CASE.
+    std = F.when(valid <= 1, F.lit(0.0)).otherwise(
+        F.sqrt(F.abs((s2 - s1 * s1 / valid + F.lit(EPS)) / (valid - 1)))
+    )
+    names = F.array(*[F.lit(c) for c in columns])
+    return g.orderBy("col_id").select(
+        F.get(names, "col_id").alias("column_name"),
+        n.cast("long").alias("total_count"),
+        (n - valid).cast("long").alias("missing_count"),
+        rnd(mean).alias("mean"),
+        rnd(std).alias("std_dev"),
+        rnd(F.col("min")).alias("min_val"),
+        rnd(F.col("max")).alias("max_val"),
+        rnd(skew).alias("skewness"),
+        rnd(kurt).alias("kurtosis"),
+        rnd(F.col("pct").getItem(0)).alias("p25"),
+        rnd(F.col("pct").getItem(1)).alias("median"),
+        rnd(F.col("pct").getItem(2)).alias("p75"),
+        F.col("dc").cast("long").alias("distinct_count"),
+    )
 
 
 def numeric_stats_oracle_sql(table: str, columns: list[str], round_to: int = 6) -> str:

@@ -4,8 +4,9 @@ Reference lifecycle (SURVEY §3): each CLI step reads/writes
 ModelConfig.json + ColumnConfig.json. Here each step is a function over
 (DataFrame, ModelConfig, list[ColumnConfig]) — same artifacts, Spark
 plans instead of Pig jobs. The reference's two stats jobs (Pig binning +
-UpdateBinningInfo MR re-read, SURVEY §3.1) collapse into a cached
-single-pass DataFrame flow.
+UpdateBinningInfo MR re-read, SURVEY §3.1) collapse into melted grouped
+aggregates over one cached input: a fixed number of Spark jobs for any
+number of columns.
 """
 
 from __future__ import annotations
@@ -26,11 +27,13 @@ def init_columns(df: DataFrame, mc: ModelConfig) -> list[ColumnConfig]:
 
     Reference: InitModelProcessor.java:106-190 — HLL distinct counts +
     numeric-parse rate drive Auto -> N/C typing; flags from ModelConfig
-    column lists. One wide agg (approx_count_distinct + conditional
-    counts), no shuffle.
+    column lists. One melt + ``groupBy(col_id)`` (approx_count_distinct
+    + conditional counts over each column's string form), whatever the
+    column count.
     """
+    from shifu_spark.operators.stats import melt
+
     ds = mc.dataset
-    aggs = []
     cols = df.columns
     dtypes = dict(df.dtypes)
     _NUMERIC = ("int", "bigint", "smallint", "tinyint", "double", "float", "decimal", "long")
@@ -38,20 +41,26 @@ def init_columns(df: DataFrame, mc: ModelConfig) -> list[ColumnConfig]:
     def is_native_numeric(c: str) -> bool:
         return any(dtypes[c].startswith(t) for t in _NUMERIC)
 
+    cells = []
     for c in cols:
         v = F.col(c)
         # parse-rate inference only applies to string transport columns;
         # typed parquet columns keep their native type
         d = v.try_cast("double") if is_native_numeric(c) or dtypes[c] == "string" else F.lit(None).cast("double")
-        aggs += [
-            F.approx_count_distinct(v).alias(f"{c}__dc"),
-            F.count(v).alias(f"{c}__n"),
-            F.count(d).alias(f"{c}__numeric"),
-        ]
-    row = df.agg(*aggs).collect()[0].asDict()
+        cells.append([v.cast("string").alias("s"), d.alias("d")])
+    counts = {
+        r["col_id"]: r
+        for r in melt(df, cells).groupBy("col_id").agg(
+            F.approx_count_distinct("s").alias("dc"),
+            F.count("s").alias("n"),
+            F.count("d").alias("numeric"),
+        ).collect()
+    }
 
     out: list[ColumnConfig] = []
     for i, c in enumerate(cols):
+        # an empty input has no group for any column
+        dc, n, num = (counts[i]["dc"], counts[i]["n"], counts[i]["numeric"]) if i in counts else (0, 0, 0)
         cc = ColumnConfig(column_num=i, column_name=c)
         if c == ds.target_column:
             cc.column_flag = ColumnFlag.TARGET
@@ -64,11 +73,10 @@ def init_columns(df: DataFrame, mc: ModelConfig) -> list[ColumnConfig]:
         elif c in ds.categorical_columns:
             cc.column_type = ColumnType.CATEGORICAL
         else:
-            n, num = row[f"{c}__n"], row[f"{c}__numeric"]
             # auto-type: mostly-parseable -> numerical, else categorical
             # (InitModelProcessor threshold semantics)
             cc.column_type = ColumnType.NUMERICAL if n and num / n >= 0.95 else ColumnType.CATEGORICAL
-        cc.column_stats.distinct_count = row[f"{c}__dc"]
+        cc.column_stats.distinct_count = dc
         out.append(cc)
     return out
 
@@ -76,13 +84,15 @@ def init_columns(df: DataFrame, mc: ModelConfig) -> list[ColumnConfig]:
 def run_stats(df: DataFrame, mc: ModelConfig, ccs: list[ColumnConfig]) -> list[ColumnConfig]:
     """`shifu stats`: fill moments, bins, bin counts, KS/IV/WOE, pos rates.
 
-    One cached pass: wide moment agg + per-population quantile agg + one
-    melt/groupBy for bin counts (see operators/stats.py scale notes).
+    One cached input, three melted aggregates whatever the column count
+    (the reference's StatsSpdtI.pig:48-62 unpivot): every numeric
+    column's moments, quartiles, distinct count and equal-population
+    boundaries in one ``groupBy(col_id)``; every categorical column's
+    category counts in one ``groupBy(col_id, value)``, with the dataset's
+    missing tokens excluded; then the numeric bin counts in one
+    ``groupBy(col_id, bin)`` (see operators/stats.py).
     """
-    from shifu_spark.operators.binning import (
-        categorical_bins,
-        equal_population_boundaries,
-    )
+    from shifu_spark.operators.binning import categorical_bins
     from shifu_spark.operators.ksiv import bin_counts_df, column_metrics_from_counts
     from shifu_spark.operators.stats import numeric_column_stats
 
@@ -95,8 +105,12 @@ def run_stats(df: DataFrame, mc: ModelConfig, ccs: list[ColumnConfig]) -> list[C
     cat_cols = [c.column_name for c in ccs if c.is_candidate and c.is_categorical]
     by_name = {c.column_name: c for c in ccs}
 
-    # numeric moments (single wide agg)
-    for s in numeric_column_stats(work, num_cols):
+    # numeric moments + boundaries per the configured BinningMethod
+    boundaries: dict[str, list[float]] = {}
+    for s in numeric_column_stats(
+        work, num_cols, num_bins=st.max_num_bin, method=st.binning_method,
+        tag_col=tag, pos_tags=pos, neg_tags=neg,
+    ):
         cc = by_name[s.column_name]
         cs = cc.column_stats
         cs.total_count = s.total_count
@@ -108,22 +122,12 @@ def run_stats(df: DataFrame, mc: ModelConfig, ccs: list[ColumnConfig]) -> list[C
         cs.p25th, cs.median, cs.p75th = s.p25, s.median, s.p75
         cs.distinct_count = s.distinct_count
         cs.missing_percentage = s.missing_percentage
-
-    # numeric boundaries per the configured BinningMethod
-    boundaries: dict[str, list[float]] = {}
-    for c in num_cols:
-        b = equal_population_boundaries(
-            work, c, st.max_num_bin, method=st.binning_method,
-            tag_col=tag, pos_tags=pos, neg_tags=neg, exact=True,
-        )
-        boundaries[c] = b
-        cc = by_name[c]
-        cc.column_binning.bin_boundary = b
-        cc.column_binning.length = len(b) + 1  # + missing slot
+        boundaries[s.column_name] = s.boundaries
+        cc.column_binning.bin_boundary = s.boundaries
+        cc.column_binning.length = len(s.boundaries) + 1  # + missing slot
 
     # categorical bins
-    for c in cat_cols:
-        cats = categorical_bins(work, c, st.cate_max_num_bin)
+    for c, cats in categorical_bins(work, cat_cols, st.cate_max_num_bin, ds.missing_tokens).items():
         cc = by_name[c]
         cc.column_binning.bin_category = cats
         cc.column_binning.length = len(cats) + 1

@@ -173,7 +173,7 @@ def _stats_oracle() -> str:
 
 @query("column_stats", None)
 def column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-column moments/percentiles/distincts — one wide agg, one pass.
+    """Per-column moments/percentiles/distincts — one melted groupBy(col_id) aggregate.
 
     Reference: UpdateBinningInfoMapper/Reducer power-sum accumulation +
     ColumnStatsCalculator NIST closed forms (see operators/stats.py).

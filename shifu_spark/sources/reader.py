@@ -42,10 +42,45 @@ def read_header(
     ``relation::col`` to the leaf name; pass False to keep the full
     namespaced names — purify/jexl then address them by either form via
     NSColumn suffix-matching (column/NSColumn.java, catalog/nscolumn.py).
+
+    ``header_path`` is a file (hidden ``.pig_header`` included) or a
+    directory such as the one :func:`write_header_sidecar` writes; it is
+    read in this process through the Hadoop FileSystem API, with no Spark
+    job.
     """
-    first_line = spark.read.text(header_path).limit(1).collect()[0][0]
+    first_line = _first_line(spark, header_path)
     cols = [c.strip() for c in first_line.split(header_delimiter)]
     return [c.split("::")[-1] for c in cols] if strip_namespace else cols
+
+
+def _first_line(spark: SparkSession, path: str) -> str:
+    """First line of a file, or of a directory's first non-empty part
+    file (``_*`` and ``.*`` entries skipped, as Spark's listing does).
+    A compressed file is decompressed by its extension's codec."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    p = jvm.org.apache.hadoop.fs.Path(path)
+    fs = p.getFileSystem(conf)
+    if fs.getFileStatus(p).isDirectory():
+        parts = sorted(
+            (st for st in fs.listStatus(p)
+             if st.isFile() and st.getLen() > 0 and not st.getPath().getName().startswith(("_", "."))),
+            key=lambda st: st.getPath().getName(),
+        )
+        if not parts:
+            raise ValueError(f"no non-empty header file under {path!r}")
+        p = parts[0].getPath()
+    stream = fs.open(p)
+    try:
+        codec = jvm.org.apache.hadoop.io.compress.CompressionCodecFactory(conf).getCodec(p)
+        if codec is not None:
+            stream = codec.createInputStream(stream)
+        line = jvm.java.io.BufferedReader(jvm.java.io.InputStreamReader(stream, "UTF-8")).readLine()
+    finally:
+        stream.close()
+    if line is None:
+        raise ValueError(f"empty header file {path!r}")
+    return line
 
 
 def read_dataset(

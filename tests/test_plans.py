@@ -43,9 +43,9 @@ class TestAggShapes:
         from shifu_spark.queries import QUERIES
 
         df = QUERIES["column_stats"](spark, SF)
-        # wide agg: everything reduces through global aggregation —
-        # no join, no per-column pass
-        assert count_shuffles(df) <= len(df.columns)  # union of k 1-row selects
+        # one melted groupBy(col_id) aggregate + the final sort — no
+        # join, no per-column pass
+        assert count_shuffles(df) <= len(df.columns)
         assert_columns_pruned(df, table_width=11)
 
     def test_normalize_is_broadcast_only(self, spark):

@@ -46,6 +46,25 @@ class TestIngest:
         _, header = text_data
         assert read_header(spark, header) == ["id", "amount", "tag"]
 
+    def test_header_hidden_plain_and_directory_sidecars(self, spark, tmp_path, text_data):
+        """A hidden ``.pig_header`` (which Spark's listing skips), a plain
+        file and the directory sidecar write_header_sidecar writes are all
+        read, without a Spark job."""
+        hidden = tmp_path / ".pig_header"
+        hidden.write_text("a|ns::b\n")
+        df = spark.createDataFrame([(1, "x")], "id int, v string")
+        out = str(tmp_path / "out")
+        write_header_sidecar(df, out, delimiter="|")
+        sc = spark.sparkContext
+        sc.setJobGroup("read-header", "read-header")
+        try:
+            assert read_header(spark, str(hidden)) == ["a", "b"]
+            assert read_header(spark, text_data[1], strip_namespace=False) == ["ns::id", "ns::amount", "tag"]
+            assert read_header(spark, out + ".pig_header") == ["id", "v"]
+        finally:
+            sc._jsc.clearJobGroup()
+        assert list(sc.statusTracker().getJobIdsForGroup("read-header")) == []
+
     def test_malformed_rows_dropped(self, spark, text_data):
         data, header = text_data
         df = read_dataset(spark, data, header_path=header)
